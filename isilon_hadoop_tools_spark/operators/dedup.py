@@ -495,6 +495,116 @@ def _width_pinned_groups(src: DataFrame, keys: list[str], *aggs) -> DataFrame:
     )
 
 
+def _rep_band_join(
+    hashes: DataFrame,
+    id_col: str,
+    hash_col: str,
+    keys: list[str],
+    band_arr,
+    max_h,
+    expand_duplicates: bool = True,
+) -> DataFrame:
+    """The rep-collapsed pigeonhole band join shared by
+    :func:`hamming_band_pairs` (``keys=[]``) and
+    :func:`tagged_hamming_band_pairs` (``keys=["modality"]``).
+
+    ``keys`` are bucket-key columns of ``hashes`` carried through
+    under their own names: every group, band bucket, join and output
+    row is keyed on them, so rows under different keys never pair.
+    ``band_arr`` is the band-slice array and ``max_h`` the per-row
+    hamming bound, both Column expressions over ``_hash`` (the
+    projected hash) and the key columns. ``keys=[]`` adds no column:
+    the plain join carries no constant key."""
+    # lazy localCheckpoint: the (id, hash) projection feeds the group
+    # table plus up to three expansion joins; hash columns are often
+    # mapInPandas-computed (image hashes) and must not recompute
+    src = hashes.select(
+        *keys, F.col(id_col).alias("id"), F.col(hash_col).alias("_hash")
+    ).localCheckpoint(eager=False)
+    groups = _width_pinned_groups(
+        src, [*keys, "_hash"], F.min("id").alias("rep"),
+        F.count(F.lit(1)).alias("n_ids"),
+    )
+    banded = groups.select(
+        *keys, "rep", "_hash",
+        F.posexplode(band_arr).alias("band_idx", "band_val"),
+    )
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            *keys, "band_idx", "band_val",
+            F.col("rep").alias(f"rep_{s}"), F.col("_hash").alias(f"h{s}"),
+        )
+
+    rep_pairs = (
+        side("a").join(side("b"), [*keys, "band_idx", "band_val"])
+        .filter(F.col("rep_a") < F.col("rep_b"))
+        .groupBy(*keys, "rep_a", "rep_b")
+        .agg(F.first("ha").alias("ha"), F.first("hb").alias("hb"))
+        .select(
+            *keys, "rep_a", "rep_b", "ha", "hb",
+            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_h)
+    )
+    if not expand_duplicates:
+        def sizes(s: str) -> DataFrame:
+            return groups.select(
+                *keys, F.col("rep").alias(f"rep_{s}"),
+                F.col("n_ids").alias(f"n_{s}"),
+            )
+
+        cross = (
+            rep_pairs.join(sizes("a"), [*keys, "rep_a"])
+            .join(sizes("b"), [*keys, "rep_b"])
+            .select(
+                *keys, F.col("rep_a").alias("id_a"), F.col("rep_b").alias("id_b"),
+                "hamming", "n_a", "n_b",
+            )
+        )
+        intra = groups.filter(F.col("n_ids") >= 2).select(
+            *keys,
+            F.col("rep").alias("id_a"),
+            F.col("rep").alias("id_b"),
+            F.lit(0).cast("int").alias("hamming"),
+            F.col("n_ids").alias("n_a"),
+            F.col("n_ids").alias("n_b"),
+        )
+        return cross.unionByName(intra)
+
+    # expand representative pairs back to member ids: each unordered
+    # hash pair appears exactly once in rep_pairs and each id has
+    # exactly one hash, so the expansion needs no pair dedup
+    def members(s: str) -> DataFrame:
+        return src.select(
+            *keys, F.col("_hash").alias(f"h{s}"), F.col("id").alias(f"_id{s}")
+        )
+
+    cross = (
+        rep_pairs.join(members("a"), [*keys, "ha"])
+        .join(members("b"), [*keys, "hb"])
+        .select(
+            *keys,
+            F.least("_ida", "_idb").alias("id_a"),
+            F.greatest("_ida", "_idb").alias("id_b"),
+            "hamming",
+        )
+        # guard against dirty input (same id under two different
+        # hashes): a (id, id, hamming>0) self-pair must not leak out
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+    # intra-group (identical-hash) pairs: straight equi-join on the
+    # hash value — output-bound, never multiplied through the bands
+    ga = src.select(*keys, "_hash", F.col("id").alias("id_a"))
+    gb = src.select(*keys, "_hash", F.col("id").alias("id_b"))
+    intra = (
+        ga.join(gb, [*keys, "_hash"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(*keys, "id_a", "id_b", F.lit(0).cast("int").alias("hamming"))
+    )
+    return cross.unionByName(intra)
+
+
 def hamming_band_pairs(
     hashes: DataFrame,
     hash_col: str,
@@ -535,103 +645,15 @@ def hamming_band_pairs(
     """
     if max_hamming >= bands:
         raise ValueError("completeness requires max_hamming < bands")
-    # lazy localCheckpoint: the (id, hash) projection feeds the group
-    # table plus up to three expansion joins; hash columns are often
-    # mapInPandas-computed (image hashes) and must not recompute
-    src = hashes.select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("_hash")
-    ).localCheckpoint(eager=False)
-    groups = _width_pinned_groups(
-        src, ["_hash"], F.min("id").alias("rep"),
-        F.count(F.lit(1)).alias("n_ids"),
+    return _rep_band_join(
+        hashes,
+        id_col,
+        hash_col,
+        [],
+        band_slice_array(F.col("_hash"), bits, bands),
+        F.lit(max_hamming),
+        expand_duplicates,
     )
-    banded = groups.select(
-        "rep",
-        "_hash",
-        F.posexplode(band_slice_array(F.col("_hash"), bits, bands)).alias(
-            "band_idx", "band_val"
-        ),
-    )
-    a = banded.select(
-        "band_idx",
-        "band_val",
-        F.col("rep").alias("rep_a"),
-        F.col("_hash").alias("ha"),
-    )
-    b = banded.select(
-        "band_idx",
-        "band_val",
-        F.col("rep").alias("rep_b"),
-        F.col("_hash").alias("hb"),
-    )
-    rep_pairs = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("rep_a") < F.col("rep_b"))
-        .groupBy("rep_a", "rep_b")
-        .agg(F.first("ha").alias("ha"), F.first("hb").alias("hb"))
-        .select(
-            "rep_a",
-            "rep_b",
-            "ha",
-            "hb",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    if not expand_duplicates:
-        sizes = groups.select("rep", "n_ids")
-        cross = (
-            rep_pairs.join(
-                sizes.select(F.col("rep").alias("rep_a"), F.col("n_ids").alias("n_a")),
-                "rep_a",
-            )
-            .join(
-                sizes.select(F.col("rep").alias("rep_b"), F.col("n_ids").alias("n_b")),
-                "rep_b",
-            )
-            .select(
-                F.col("rep_a").alias("id_a"),
-                F.col("rep_b").alias("id_b"),
-                "hamming",
-                "n_a",
-                "n_b",
-            )
-        )
-        intra = groups.filter(F.col("n_ids") >= 2).select(
-            F.col("rep").alias("id_a"),
-            F.col("rep").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-            F.col("n_ids").alias("n_a"),
-            F.col("n_ids").alias("n_b"),
-        )
-        return cross.unionByName(intra)
-    # expand representative pairs back to member ids: each unordered
-    # hash pair appears exactly once in rep_pairs and each id has
-    # exactly one hash, so the expansion needs no pair dedup
-    cross = (
-        rep_pairs.join(
-            src.select(F.col("_hash").alias("ha"), F.col("id").alias("_ida")), "ha"
-        )
-        .join(src.select(F.col("_hash").alias("hb"), F.col("id").alias("_idb")), "hb")
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "hamming",
-        )
-        # guard against dirty input (same id under two different
-        # hashes): a (id, id, hamming>0) self-pair must not leak out
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    # intra-group (identical-hash) pairs: straight equi-join on the
-    # hash value — output-bound, never multiplied through the bands
-    ga = src.select("_hash", F.col("id").alias("id_a"))
-    gb = src.select("_hash", F.col("id").alias("id_b"))
-    intra = (
-        ga.join(gb, "_hash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).cast("int").alias("hamming"))
-    )
-    return cross.unionByName(intra)
 
 
 def tagged_band_slice_array(hash_col, modality_col, params: dict):
@@ -668,6 +690,30 @@ def tagged_band_slice_array(hash_col, modality_col, params: dict):
     return F.when(guard.isNull(), out)
 
 
+def _check_tagged_params(params: dict) -> None:
+    """Pigeonhole completeness per modality (``max_hamming < bands``)
+    — the tagged batch join's and streaming index's shared check."""
+    for m, (_bits, max_h, bands) in params.items():
+        if max_h >= bands:
+            raise ValueError(
+                f"completeness requires max_hamming < bands for {m!r}"
+            )
+
+
+def _tagged_max_hamming(modality_col, params: dict):
+    """The per-row hamming bound of a tagged band join: a ``CASE``
+    chain over the modality tag yielding that modality's
+    ``max_hamming`` — shared by the batch join and the streaming
+    unified index."""
+    out = None
+    for m, (_bits, max_h, _bands) in sorted(params.items()):
+        cond = modality_col == m
+        out = F.when(cond, F.lit(max_h)) if out is None else out.when(
+            cond, F.lit(max_h)
+        )
+    return out
+
+
 def tagged_hamming_band_pairs(
     df: DataFrame,
     params: dict[str, tuple[int, int, int]],
@@ -685,8 +731,9 @@ def tagged_hamming_band_pairs(
     key both prevents cross-modality collisions and lets every
     modality use a different band split inside the one shuffle.
 
-    Same safety construction as :func:`hamming_band_pairs` (this is
-    the SURVEY §7.8 "one index design, four modalities" claim made
+    The same core as :func:`hamming_band_pairs` —
+    :func:`_rep_band_join` keyed on ``["modality"]`` (this is the
+    SURVEY §7.8 "one index design, four modalities" claim made
     executable): identical fingerprints collapse to a min-id
     representative per DISTINCT ``(modality, hash)`` before banding,
     the band join is pigeonhole-complete per modality
@@ -699,103 +746,20 @@ def tagged_hamming_band_pairs(
     Output: ``modality``, ``id_a``, ``id_b``, ``hamming`` with
     ``id_a < id_b``, one row per qualifying same-modality pair.
     """
-    for m, (bits, max_h, bands) in params.items():
-        if max_h >= bands:
-            raise ValueError(
-                f"completeness requires max_hamming < bands for {m!r}"
-            )
-
-    def per_modality(expr_of):
-        out = None
-        for m, p in sorted(params.items()):
-            e = expr_of(p)
-            out = F.when(F.col("modality") == m, e) if out is None else out.when(
-                F.col("modality") == m, e
-            )
-        return out
-
-    src = df.select(
+    _check_tagged_params(params)
+    tagged = df.select(
         F.col(modality_col).alias("modality"),
         F.col(id_col).alias("id"),
         F.col(hash_col).alias("_hash"),
-    ).localCheckpoint(eager=False)
-    groups = _width_pinned_groups(
-        src, ["modality", "_hash"], F.min("id").alias("rep")
     )
-    band_arr = tagged_band_slice_array(
-        F.col("_hash"), F.col("modality"), params
-    )
-    banded = groups.select(
-        "modality",
-        "rep",
+    return _rep_band_join(
+        tagged,
+        "id",
         "_hash",
-        F.posexplode(band_arr).alias("band_idx", "band_val"),
+        ["modality"],
+        tagged_band_slice_array(F.col("_hash"), F.col("modality"), params),
+        _tagged_max_hamming(F.col("modality"), params),
     )
-    a = banded.select(
-        "modality",
-        "band_idx",
-        "band_val",
-        F.col("rep").alias("rep_a"),
-        F.col("_hash").alias("ha"),
-    )
-    b = banded.select(
-        "modality",
-        "band_idx",
-        "band_val",
-        F.col("rep").alias("rep_b"),
-        F.col("_hash").alias("hb"),
-    )
-    max_h_expr = per_modality(lambda p: F.lit(p[1]))
-    rep_pairs = (
-        a.join(b, ["modality", "band_idx", "band_val"])
-        .filter(F.col("rep_a") < F.col("rep_b"))
-        .groupBy("modality", "rep_a", "rep_b")
-        .agg(F.first("ha").alias("ha"), F.first("hb").alias("hb"))
-        .select(
-            "modality",
-            "rep_a",
-            "rep_b",
-            "ha",
-            "hb",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_h_expr)
-    )
-    cross = (
-        rep_pairs.join(
-            src.select(
-                "modality",
-                F.col("_hash").alias("ha"),
-                F.col("id").alias("_ida"),
-            ),
-            ["modality", "ha"],
-        )
-        .join(
-            src.select(
-                "modality",
-                F.col("_hash").alias("hb"),
-                F.col("id").alias("_idb"),
-            ),
-            ["modality", "hb"],
-        )
-        .select(
-            "modality",
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "hamming",
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    ga = src.select("modality", "_hash", F.col("id").alias("id_a"))
-    gb = src.select("modality", "_hash", F.col("id").alias("id_b"))
-    intra = (
-        ga.join(gb, ["modality", "_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "modality", "id_a", "id_b", F.lit(0).cast("int").alias("hamming")
-        )
-    )
-    return cross.unionByName(intra)
 
 
 def connected_components(

@@ -10,10 +10,33 @@ slow path.
 from __future__ import annotations
 
 import os
+import re
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# a shuffle ``Exchange`` node of an ``explain("simple")`` tree: the node
+# name right after the tree-drawing prefix, so ``BroadcastExchange``,
+# ``ReusedExchange`` and the word inside an expression do not match
+_SHUFFLE_EXCHANGE_NODE = re.compile(r"^[\s:+\-]*Exchange\b", re.MULTILINE)
+
+
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Label every Spark job launched inside the block ``"op: step"``
+    (``spark.job.description``, shown per job in the UI and the event
+    log) and restore the thread's previous description on exit —
+    including when the block raises, so an aborted step never leaves
+    its label on the caller's later jobs."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
 
 
 def shuffle_partition_count(spark: SparkSession, default: int = 200) -> int:
@@ -45,12 +68,14 @@ def widen_narrow_input(df, *keys):
     (``toRdd``), so a frame whose physical plan already contains an
     ``Exchange`` is passed through untouched rather than probed: its
     width is shuffle-determined (not scan-determined), and probing it
-    would silently execute the upstream stages twice."""
+    would silently execute the upstream stages twice. Only shuffle
+    ``Exchange`` nodes count: a ``BroadcastExchange`` (a scan joined to
+    a small dim) leaves the frame scan-width-bound."""
     npart = max(2, shuffle_partition_count(df.sparkSession))
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple"
     )
-    if "Exchange" in plan:
+    if _SHUFFLE_EXCHANGE_NODE.search(plan):
         return df
     if df.rdd.getNumPartitions() < npart:
         return df.repartition(npart, *keys)

@@ -29,6 +29,7 @@ from isilon_hadoop_tools_spark.streaming.neardup import (
 from isilon_hadoop_tools_spark.streaming.events import (
     dedup_first_stream,
     dedup_within_watermark,
+    drain_into_state,
     hourly_rollup_stream,
     sliding_rollup_stream,
     static_enrich_rollup_stream,
@@ -43,6 +44,7 @@ __all__ = [
     "domain_caps_apply_batch",
     "domain_caps_stream_into_state",
     "dedup_within_watermark",
+    "drain_into_state",
     "hourly_rollup_stream",
     "sliding_rollup_stream",
     "static_enrich_rollup_stream",

@@ -317,6 +317,24 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
+def drain_into_state(
+    stream_df: DataFrame, apply_batch, checkpoint: str | None
+) -> None:
+    """Drain ``stream_df`` through ``apply_batch(batch, batch_id)``
+    via ``foreachBatch`` with ``trigger(availableNow)`` and block
+    until every available batch is applied — the one drain behind
+    every ``*_stream_into_*`` sink. With ``checkpoint`` a restart
+    resumes at the committed offsets; without one, a re-drain replays
+    every batch and each sink's own discipline (idempotent merge,
+    members anti-join, batch-id markers) makes the replay a no-op."""
+    writer = stream_df.writeStream.foreachBatch(apply_batch).trigger(
+        availableNow=True
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer.start().awaitTermination()
+
+
 def hll_stream_into_state(
     events: DataFrame,
     state: ParquetState,
@@ -345,13 +363,7 @@ def hll_stream_into_state(
         current = state.read(table, schema)
         state.write(table, hll_merge([current, delta]))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 def merge_stream_into_state(
@@ -371,11 +383,7 @@ def merge_stream_into_state(
         current = state.read(table, schema)
         state.write(table, merge_create(current, delta, "event_id"))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 def _marker_gate(current: DataFrame, batch_id: int, schema: str):
@@ -457,13 +465,7 @@ def banded_count_stream_into_state(
         )
         state.write(table, merged.unionByName(markers))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 def cms_stream_into_state(
@@ -528,19 +530,27 @@ def cms_stream_into_state(
             cms_merge([counts, delta]).unionByName(markers),
         )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 CDC_STATE_SCHEMA = (
     "user_id LONG, ts TIMESTAMP, event_id LONG, "
     "event_type STRING, value DOUBLE"
 )
+
+
+def _cdc_latest(df: DataFrame) -> DataFrame:
+    """Per-key latest row under the (ts, event_id) total order — the
+    CDC merge algebra shared by the state writer and the
+    merge-on-read reader. Order-independent and idempotent:
+    ``latest(A ∪ B) == latest(latest(A) ∪ latest(B))``."""
+    order = F.struct(F.col("ts").alias("_t"), F.col("event_id").alias("_tb"))
+    payload = F.struct("ts", "event_id", "event_type", "value")
+    return (
+        df.groupBy("user_id")
+        .agg(F.max_by(payload, order).alias("_p"))
+        .select("user_id", "_p.*")
+    )
 
 
 def cdc_stream_into_state(
@@ -566,29 +576,10 @@ def cdc_stream_into_state(
     """
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        order = F.struct(
-            F.col("ts").alias("_t"), F.col("event_id").alias("_tb")
-        )
-        payload = F.struct("ts", "event_id", "event_type", "value")
-        delta = batch.groupBy("user_id").agg(
-            F.max_by(payload, order).alias("_p")
-        ).select("user_id", "_p.*")
         current = state.read(table, CDC_STATE_SCHEMA)
-        merged = (
-            current.unionByName(delta)
-            .groupBy("user_id")
-            .agg(F.max_by(payload, order).alias("_p"))
-            .select("user_id", "_p.*")
-        )
-        state.write(table, merged)
+        state.write(table, _cdc_latest(current.unionByName(_cdc_latest(batch))))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 KMV_STATE_SCHEMA = "h LONG, event_id LONG, value DOUBLE"
@@ -638,27 +629,7 @@ def kmv_stream_into_state(
         )
         state.write(table, merged)
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
-
-
-def _cdc_latest(df: DataFrame) -> DataFrame:
-    """Per-key latest row under the (ts, event_id) total order — the
-    CDC merge algebra shared by the state writer and the
-    merge-on-read reader. Order-independent and idempotent:
-    ``latest(A ∪ B) == latest(latest(A) ∪ latest(B))``."""
-    order = F.struct(F.col("ts").alias("_t"), F.col("event_id").alias("_tb"))
-    payload = F.struct("ts", "event_id", "event_type", "value")
-    return (
-        df.groupBy("user_id")
-        .agg(F.max_by(payload, order).alias("_p"))
-        .select("user_id", "_p.*")
-    )
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 def cdc_state_from_snapshots(
@@ -772,13 +743,7 @@ def cdc_stream_into_snapshots(
                 delta, table_dir, kind="delta", base_version=base
             )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 SPRT_STATE_SCHEMA = (
@@ -912,14 +877,11 @@ def sprt_stream_into_state(
             table, spark.createDataFrame([new], SPRT_STATE_SCHEMA)
         )
 
-    src = events.withColumn("_hit", F.col("event_type") == "purchase")
-    writer = src.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+    drain_into_state(
+        events.withColumn("_hit", F.col("event_type") == "purchase"),
+        apply_batch,
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 def append_stream_into_snapshots(
@@ -977,13 +939,7 @@ def append_stream_into_snapshots(
             },
         )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 def _latest_batch_watermark(table_dir: str) -> tuple[int | None, int | None]:
@@ -1079,13 +1035,7 @@ def cdc_delete_stream_into_snapshots(
             meta={"batch_id": int(batch_id), "batch_watermark": new_wm},
         )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(events, apply_batch, checkpoint)
 
 
 def cdc_state_from_mor_snapshots(

@@ -1,16 +1,26 @@
 """Streaming near-dup maintenance (§2.9 x L4/L6): SimHash hamming
-pairs and MinHash-LSH candidates over a continuously-crawled corpus.
+pairs, unified multimodal hamming pairs and MinHash-LSH candidates
+over a continuously-crawled corpus.
 
 The production shape: each micro-batch of new documents is
 fingerprinted, matched against a persisted band index, and the
 newly-created near-dup pairs are appended — without ever re-running
-the corpus-wide band self-join. Two instances of one design:
-:func:`simhash_index_apply_batch` (integer fingerprints, bit-slice
-bands, hamming filter) and :func:`minhash_index_apply_batch`
-(signature strings, band-key equality, agreeing-band counts).
+the corpus-wide band self-join. The hamming indexes are ONE design:
+:func:`_band_index_apply`, keyed like the batch core
+:func:`~isilon_hadoop_tools_spark.operators.dedup._rep_band_join` —
+no bucket key for :func:`simhash_index_apply_batch` (integer SimHash
+fingerprints), ``["modality"]`` for :func:`tagged_index_apply_batch`
+(text/image/audio/video fingerprints in one index, each modality with
+its own band split and hamming bound). The wrappers differ only in
+how they fingerprint a batch and in their state table names.
+:func:`minhash_index_apply_batch` keeps the same discipline over
+signature strings, where the pair score is an agreeing-band count
+rather than a hamming distance.
 
 State (``ParquetState`` tables; Delta/Iceberg MERGE on a real
-deployment):
+deployment), shown for the plain index — the tagged index keeps
+``tfp_members`` / ``tband_postings`` / ``tnear_pairs`` with a leading
+``modality`` column:
 
 - ``fp_members`` (id, fp): one row per seen document.
 - ``band_postings`` (band_idx, band_val, fp): the band index over
@@ -22,14 +32,14 @@ deployment):
 
 Per batch (all bounded joins, no corpus self-join):
 
-1. anti-join the batch's fingerprints against ``fp_members`` — only
+1. anti-join the batch's fingerprints against the members — only
    genuinely NEW ids proceed (a replayed batch is a no-op, which is
    what makes the whole operator idempotent without a checkpoint);
 2. band the batch's distinct fingerprints and equi-join them against
    the upserted postings — pigeonhole-complete candidates (every
    pair within ``max_hamming < bands`` agrees on >= 1 slice);
 3. expand qualifying fingerprint pairs to (new id, any member) pairs
-   and merge them into ``near_pairs``.
+   and merge them into the pairs table.
 
 Write order is crash-safe: pairs, then postings, then members — a
 batch is "committed" only once the members land, so a crash between
@@ -45,10 +55,11 @@ fingerprint pairs / bands so a re-added posting row can never
 double-count (partial-append simulation in the tests).
 
 Batch-equivalence contract (the oracle): after draining any prefix of
-the stream, ``near_pairs`` equals the batch
-``simhash_near_pairs`` over the same prefix — every qualifying pair
-(x, y) is detected when the later of x, y arrives, because by then
-the earlier one's fingerprint is in the postings index.
+the stream, the pairs table equals the batch join (``simhash_near_pairs``
+/ ``tagged_hamming_band_pairs``) over the same prefix — every
+qualifying pair (x, y) is detected when the later of x, y arrives,
+because by then the earlier one's fingerprint is in the postings
+index.
 """
 
 from __future__ import annotations
@@ -57,11 +68,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from isilon_hadoop_tools_spark.operators.dedup import (
+    _check_tagged_params,
+    _tagged_max_hamming,
     band_slice_array,
     minhash_sig_keys,
     simhash,
+    tagged_band_slice_array,
 )
 from isilon_hadoop_tools_spark.plans.state import ParquetState
+from isilon_hadoop_tools_spark.session import job_label, shuffle_partition_count
+from isilon_hadoop_tools_spark.streaming.events import drain_into_state
 
 MEMBERS_SCHEMA = "id LONG, fp LONG"
 POSTINGS_SCHEMA = "band_idx INT, band_val LONG, fp LONG"
@@ -71,100 +87,117 @@ SIG_MEMBERS_SCHEMA = "id LONG, sig_key STRING"
 SIG_POSTINGS_SCHEMA = "band INT, band_key STRING, sig_key STRING"
 SIG_PAIRS_SCHEMA = "id_a LONG, id_b LONG, n_bands LONG"
 
+TAGGED_MEMBERS_SCHEMA = "modality STRING, id LONG, fp LONG"
+TAGGED_POSTINGS_SCHEMA = (
+    "modality STRING, band_idx INT, band_val LONG, fp LONG"
+)
+TAGGED_PAIRS_SCHEMA = "modality STRING, id_a LONG, id_b LONG, hamming INT"
 
-def simhash_index_apply_batch(
-    batch: DataFrame,
+
+def _band_index_apply(
+    delta: DataFrame,
     state: ParquetState,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 32,
-    max_hamming: int = 3,
-    bands: int = 4,
+    keys: list[str],
+    band_arr,
+    max_h,
+    tables: tuple[tuple[str, str], tuple[str, str], tuple[str, str]],
+    op: str,
 ) -> None:
-    """Fold one micro-batch of documents into the band index and
-    append the newly-detected near-dup pairs (see module docstring)."""
-    if max_hamming >= bands:
-        raise ValueError("completeness requires max_hamming < bands")
-    delta = simhash(batch, text_col, id_col, bits).select(
-        "id", F.col("simhash").alias("fp")
-    )
-    members = state.read("fp_members", MEMBERS_SCHEMA)
+    """Fold one micro-batch of fingerprints ``delta`` (``*keys, id,
+    fp``) into a persisted band index and merge the newly-detected
+    pairs (see module docstring) — the one applier behind
+    :func:`simhash_index_apply_batch` (``keys=[]``) and
+    :func:`tagged_index_apply_batch` (``keys=["modality"]``).
+
+    ``band_arr`` and ``max_h`` are Column expressions over ``fp`` and
+    the key columns: the band-slice array and the per-row hamming
+    bound. ``tables`` is ``((members, schema), (postings, schema),
+    (pairs, schema))``; every Spark job is labelled ``"{op}: step"``."""
+    (members_t, members_s), (postings_t, postings_s), (pairs_t, pairs_s) = tables
+    spark = delta.sparkSession
+    npart = max(2, shuffle_partition_count(spark))
+    members = state.read(members_t, members_s)
     # eager localCheckpoint: batch-sized, consumed by the candidate
     # expansion AND the members merge — must not recompute the
     # fingerprint aggregation per consumer
-    new_members = delta.join(
-        members.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)
-    if not new_members.take(1):
-        return  # replayed or empty batch: nothing to fold in
-    postings = state.read("band_postings", POSTINGS_SCHEMA)
+    with job_label(spark, f"{op}: new_members checkpoint"):
+        new_members = delta.join(
+            members.select(*keys, "id"), [*keys, "id"], "left_anti"
+        ).localCheckpoint(eager=True)
+    with job_label(spark, f"{op}: empty-batch probe"):
+        if not new_members.take(1):
+            return  # replayed or empty batch: nothing to fold in
+    postings = state.read(postings_t, postings_s)
     # keyed numbered repartition REPLACES the distinct's exchange
     # (same required distribution, AQE-exempt): without it the
     # checkpoint materializes at the anti-join's AQE-coalesced width
     # (1 partition for a micro-batch) and the band fan-out + hamming
     # candidate stage downstream runs single-task — profiled 0.8 →
-    # 1.9 → 2.3 s across three batches on the unified twin.
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    _npart = max(2, shuffle_partition_count(batch.sparkSession))
-    delta_fps = (
-        new_members.select("fp")
-        .repartition(_npart, "fp")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    new_fps = delta_fps.join(
-        postings.filter(F.col("band_idx") == 0).select("fp"), "fp", "left_anti"
-    )
-    new_postings = (
-        new_fps.select(
-            F.posexplode(band_slice_array(F.col("fp"), bits, bands)).alias(
-                "band_idx", "band_val"
-            ),
-            "fp",
+    # 1.9 → 2.3 s across three batches on the unified index.
+    with job_label(spark, f"{op}: delta_fps checkpoint"):
+        delta_fps = (
+            new_members.select(*keys, "fp")
+            .repartition(npart, *keys, "fp")
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .select(F.col("band_idx").cast("int"), "band_val", "fp")
-        # eager: O(batch) rows, consumed by the candidate join AND the
-        # postings append. The earlier form checkpointed the WHOLE
-        # postings union instead — an O(index) materialization per
-        # batch that grew with the stream (profiled 0.7 → 1.4 → 2.4 s
-        # across three batches); the union below is lazy now and the
-        # index side streams straight from its parquet scan.
-        .localCheckpoint(eager=True)
+    new_fps = delta_fps.join(
+        postings.filter(F.col("band_idx") == 0).select(*keys, "fp"),
+        [*keys, "fp"],
+        "left_anti",
     )
+    with job_label(spark, f"{op}: new_postings checkpoint"):
+        new_postings = (
+            new_fps.select(
+                *keys,
+                F.posexplode(band_arr).alias("band_idx", "band_val"),
+                "fp",
+            )
+            .select(*keys, F.col("band_idx").cast("int"), "band_val", "fp")
+            # eager: O(batch) rows, consumed by the candidate join AND
+            # the postings append. The earlier form checkpointed the
+            # WHOLE postings union instead — an O(index)
+            # materialization per batch that grew with the stream
+            # (profiled 0.7 → 1.4 → 2.4 s across three batches); the
+            # union below is lazy and the index side streams straight
+            # from its parquet scan.
+            .localCheckpoint(eager=True)
+        )
     all_postings = postings.unionByName(new_postings)
     # pigeonhole candidates: batch's distinct fps x the full index,
-    # keyed on (band slice index, slice value) — includes the
+    # keyed on (*keys, band slice index, slice value) — includes the
     # fp==fp case (identical fingerprints agree on every band)
     delta_banded = delta_fps.select(
+        *keys,
         F.col("fp").alias("fp_d"),
-        F.posexplode(band_slice_array(F.col("fp"), bits, bands)).alias(
-            "band_idx", "band_val"
-        ),
+        F.posexplode(band_arr).alias("band_idx", "band_val"),
     )
     cand = (
-        delta_banded.join(all_postings, ["band_idx", "band_val"])
-        .select("fp_d", F.col("fp").alias("fp_o"))
+        delta_banded.join(all_postings, [*keys, "band_idx", "band_val"])
+        .select(*keys, "fp_d", F.col("fp").alias("fp_o"))
         .distinct()
         .withColumn(
             "hamming",
             F.bit_count(F.col("fp_d").bitwiseXOR(F.col("fp_o"))).cast("int"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= max_h)
     )
     merged_members = members.unionByName(new_members)
     pairs = (
         cand.join(
-            new_members.select(F.col("fp").alias("fp_d"), F.col("id").alias("_ida")),
-            "fp_d",
+            new_members.select(
+                *keys, F.col("fp").alias("fp_d"), F.col("id").alias("_ida")
+            ),
+            [*keys, "fp_d"],
         )
         .join(
             merged_members.select(
-                F.col("fp").alias("fp_o"), F.col("id").alias("_idb")
+                *keys, F.col("fp").alias("fp_o"), F.col("id").alias("_idb")
             ),
-            "fp_o",
+            [*keys, "fp_o"],
         )
         .select(
+            *keys,
             F.least("_ida", "_idb").alias("id_a"),
             F.greatest("_ida", "_idb").alias("id_b"),
             "hamming",
@@ -178,21 +211,20 @@ def simhash_index_apply_batch(
         # side coalesced to 1 task on later batches)
         .filter(F.col("id_a") < F.col("id_b"))
     )
-    current = state.read("near_pairs", PAIRS_SCHEMA)
+    current = state.read(pairs_t, pairs_s)
     # wide write: coalesce(1) would collapse the merge aggregation
     # itself to one task (profiled as multi-second single-task jobs
     # on the later batches); passing the plan's shuffle width keeps
     # the groupBy stage parallel at the cost of more (swap-replaced,
     # never accumulating) state files.
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    state.write(
-        "near_pairs",
-        current.unionByName(pairs)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("hamming").cast("int").alias("hamming")),
-        partitions=max(2, shuffle_partition_count(batch.sparkSession)),
-    )
+    with job_label(spark, f"{op}: pairs merge write"):
+        state.write(
+            pairs_t,
+            current.unionByName(pairs)
+            .groupBy(*keys, "id_a", "id_b")
+            .agg(F.min("hamming").cast("int").alias("hamming")),
+            partitions=npart,
+        )
     # index tables APPEND their delta — O(batch) writes per batch,
     # not an O(corpus) rewrite (swap-on-write would make total write
     # work quadratic in the stream length). Partial-append crash
@@ -200,8 +232,43 @@ def simhash_index_apply_batch(
     # ids, the postings anti-join re-adds only fps missing band 0,
     # and candidate generation dedups (fp_d, fp_o) before the
     # hamming filter so re-added posting rows cannot double-count.
-    state.append("band_postings", new_postings)
-    state.append("fp_members", new_members)
+    with job_label(spark, f"{op}: postings append"):
+        state.append(postings_t, new_postings)
+    with job_label(spark, f"{op}: members append"):
+        state.append(members_t, new_members)
+
+
+def simhash_index_apply_batch(
+    batch: DataFrame,
+    state: ParquetState,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bits: int = 32,
+    max_hamming: int = 3,
+    bands: int = 4,
+) -> None:
+    """Fold one micro-batch of documents into the SimHash band index
+    (``fp_members`` / ``band_postings`` / ``near_pairs``) and append
+    the newly-detected near-dup pairs: :func:`_band_index_apply` with
+    no bucket key (see module docstring)."""
+    if max_hamming >= bands:
+        raise ValueError("completeness requires max_hamming < bands")
+    delta = simhash(batch, text_col, id_col, bits).select(
+        "id", F.col("simhash").alias("fp")
+    )
+    _band_index_apply(
+        delta,
+        state,
+        [],
+        band_slice_array(F.col("fp"), bits, bands),
+        F.lit(max_hamming),
+        (
+            ("fp_members", MEMBERS_SCHEMA),
+            ("band_postings", POSTINGS_SCHEMA),
+            ("near_pairs", PAIRS_SCHEMA),
+        ),
+        "simhash_index",
+    )
 
 
 def simhash_stream_into_state(
@@ -231,11 +298,7 @@ def simhash_stream_into_state(
             bands=bands,
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 def minhash_index_apply_batch(
@@ -247,7 +310,7 @@ def minhash_index_apply_batch(
     bands: int = 4,
     k: int = 3,
 ) -> None:
-    """The MinHash-LSH twin of :func:`simhash_index_apply_batch`:
+    """The MinHash-LSH twin of :func:`_band_index_apply`:
     fold one micro-batch into a persisted band-key index and append
     the newly-created LSH candidate pairs ``(id_a, id_b, n_bands)``.
 
@@ -263,40 +326,43 @@ def minhash_index_apply_batch(
     x, y arrives — the earlier signature is in the postings by then,
     and agreeing bands join key-for-key).
     """
+    spark = batch.sparkSession
+    npart = max(2, shuffle_partition_count(spark))
     delta = minhash_sig_keys(batch, text_col, id_col, num_hashes, bands, k)
     members = state.read("sig_members", SIG_MEMBERS_SCHEMA)
-    new_members = delta.join(
-        members.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)
-    if not new_members.take(1):
-        return  # replayed or empty batch
+    with job_label(spark, "minhash_index: new_members checkpoint"):
+        new_members = delta.join(
+            members.select("id"), "id", "left_anti"
+        ).localCheckpoint(eager=True)
+    with job_label(spark, "minhash_index: empty-batch probe"):
+        if not new_members.take(1):
+            return  # replayed or empty batch
     postings = state.read("sig_postings", SIG_POSTINGS_SCHEMA)
-    # width-pinned delta checkpoint — see simhash_index_apply_batch
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    _npart = max(2, shuffle_partition_count(batch.sparkSession))
-    delta_sigs = (
-        new_members.select("sig_key")
-        .repartition(_npart, "sig_key")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # width-pinned delta checkpoint — see _band_index_apply
+    with job_label(spark, "minhash_index: delta_sigs checkpoint"):
+        delta_sigs = (
+            new_members.select("sig_key")
+            .repartition(npart, "sig_key")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
     new_sigs = delta_sigs.join(
         postings.filter(F.col("band") == 0).select("sig_key"),
         "sig_key",
         "left_anti",
     )
-    new_postings = (
-        new_sigs.select(
-            F.posexplode(F.split("sig_key", r"\|")).alias("band", "band_key"),
-            "sig_key",
+    with job_label(spark, "minhash_index: new_postings checkpoint"):
+        new_postings = (
+            new_sigs.select(
+                F.posexplode(F.split("sig_key", r"\|")).alias("band", "band_key"),
+                "sig_key",
+            )
+            .select(F.col("band").cast("int"), "band_key", "sig_key")
+            # eager O(batch) checkpoint; the index union stays lazy
+            # (see _band_index_apply — the old O(index)-per-batch
+            # union checkpoint grew with the stream)
+            .localCheckpoint(eager=True)
         )
-        .select(F.col("band").cast("int"), "band_key", "sig_key")
-        # eager O(batch) checkpoint; the index union stays lazy (see
-        # simhash_index_apply_batch — the old O(index)-per-batch
-        # union checkpoint grew with the stream)
-        .localCheckpoint(eager=True)
-    )
     all_postings = postings.unionByName(new_postings)
     delta_banded = delta_sigs.select(
         F.col("sig_key").alias("sig_d"),
@@ -339,19 +405,20 @@ def minhash_index_apply_batch(
         .filter(F.col("id_a") < F.col("id_b"))
     )
     current = state.read("lsh_pairs", SIG_PAIRS_SCHEMA)
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    state.write(
-        "lsh_pairs",
-        current.unionByName(pairs)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("n_bands").alias("n_bands")),
-        # wide write — see simhash_index_apply_batch
-        partitions=max(2, shuffle_partition_count(batch.sparkSession)),
-    )
-    # O(delta) index appends — see simhash_index_apply_batch
-    state.append("sig_postings", new_postings)
-    state.append("sig_members", new_members)
+    with job_label(spark, "minhash_index: pairs merge write"):
+        state.write(
+            "lsh_pairs",
+            current.unionByName(pairs)
+            .groupBy("id_a", "id_b")
+            .agg(F.max("n_bands").alias("n_bands")),
+            # wide write — see _band_index_apply
+            partitions=npart,
+        )
+    # O(delta) index appends — see _band_index_apply
+    with job_label(spark, "minhash_index: postings append"):
+        state.append("sig_postings", new_postings)
+    with job_label(spark, "minhash_index: members append"):
+        state.append("sig_members", new_members)
 
 
 def minhash_stream_into_state(
@@ -381,11 +448,7 @@ def minhash_stream_into_state(
             k=k,
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 IVF_MEMBERS_SCHEMA = "vid LONG"
@@ -452,20 +515,7 @@ def ivf_stream_into_state(
             batch, state, centroids, vec_col, id_col, scale
         )
 
-    writer = vecs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
-
-
-TAGGED_MEMBERS_SCHEMA = "modality STRING, id LONG, fp LONG"
-TAGGED_POSTINGS_SCHEMA = (
-    "modality STRING, band_idx INT, band_val LONG, fp LONG"
-)
-TAGGED_PAIRS_SCHEMA = "modality STRING, id_a LONG, id_b LONG, hamming INT"
+    drain_into_state(vecs, apply_batch, checkpoint)
 
 
 def tagged_index_apply_batch(
@@ -478,33 +528,17 @@ def tagged_index_apply_batch(
     unified band index (the streaming twin of the batch
     ``tagged_hamming_band_pairs``, completing L16u for the
     continuous-crawl case): one postings table, one members table,
-    one pairs table, with the modality inside every key so buckets
+    one pairs table (``tfp_members`` / ``tband_postings`` /
+    ``tnear_pairs``), with the modality inside every key so buckets
     never mix and each modality keeps its own ``params[(bits,
-    max_hamming, bands)]`` inside the shared maintenance pipeline.
+    max_hamming, bands)]``.
 
-    Same crash/replay discipline as the per-modality indexes
-    (members anti-join ⇒ replayed batches are no-ops; pairs →
-    postings → members write order; appends are O(batch), never an
-    index rewrite) — one discipline now maintains the whole
+    This is :func:`_band_index_apply` keyed on ``["modality"]`` — the
+    same maintenance pipeline, crash/replay discipline and write
+    order as the plain SimHash index, maintaining the whole
     multimodal corpus instead of four copies of it.
     """
-    from isilon_hadoop_tools_spark.operators.dedup import (
-        tagged_band_slice_array,
-    )
-
-    for m, (_bits, max_h, bands) in params.items():
-        if max_h >= bands:
-            raise ValueError(
-                f"completeness requires max_hamming < bands for {m!r}"
-            )
-    max_h_expr = None
-    for m, (_bits, max_h, _bands) in sorted(params.items()):
-        cond = F.col("modality") == m
-        max_h_expr = (
-            F.when(cond, F.lit(max_h))
-            if max_h_expr is None
-            else max_h_expr.when(cond, F.lit(max_h))
-        )
+    _check_tagged_params(params)
     # NULL modality tags are pruned EXPLICITLY at ingest (mirrors the
     # guard in tagged_band_slice_array, which accepts NULL tags and
     # yields a NULL band array): the batch band join infers an
@@ -514,109 +548,19 @@ def tagged_index_apply_batch(
     delta = fps.filter(F.col("modality").isNotNull()).select(
         "modality", "id", F.col("fhash").alias("fp")
     )
-    sc = fps.sparkSession.sparkContext
-    members = state.read("tfp_members", TAGGED_MEMBERS_SCHEMA)
-    sc.setJobDescription("tagged_index: new_members checkpoint")
-    new_members = delta.join(
-        members.select("modality", "id"), ["modality", "id"], "left_anti"
-    ).localCheckpoint(eager=True)
-    sc.setJobDescription("tagged_index: empty-batch probe")
-    if not new_members.take(1):
-        sc.setJobDescription(None)
-        return  # replayed or empty batch
-    postings = state.read("tband_postings", TAGGED_POSTINGS_SCHEMA)
-    # width-pinned delta checkpoint — see simhash_index_apply_batch
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    _npart = max(2, shuffle_partition_count(fps.sparkSession))
-    sc.setJobDescription("tagged_index: delta_fps checkpoint")
-    delta_fps = (
-        new_members.select("modality", "fp")
-        .repartition(_npart, "modality", "fp")
-        .distinct()
-        .localCheckpoint(eager=True)
+    _band_index_apply(
+        delta,
+        state,
+        ["modality"],
+        tagged_band_slice_array(F.col("fp"), F.col("modality"), params),
+        _tagged_max_hamming(F.col("modality"), params),
+        (
+            ("tfp_members", TAGGED_MEMBERS_SCHEMA),
+            ("tband_postings", TAGGED_POSTINGS_SCHEMA),
+            ("tnear_pairs", TAGGED_PAIRS_SCHEMA),
+        ),
+        "tagged_index",
     )
-    new_fps = delta_fps.join(
-        postings.filter(F.col("band_idx") == 0).select("modality", "fp"),
-        ["modality", "fp"],
-        "left_anti",
-    )
-    band_arr = tagged_band_slice_array(
-        F.col("fp"), F.col("modality"), params
-    )
-    sc.setJobDescription("tagged_index: new_postings checkpoint")
-    new_postings = (
-        new_fps.select(
-            "modality",
-            F.posexplode(band_arr).alias("band_idx", "band_val"),
-            "fp",
-        )
-        .select(
-            "modality", F.col("band_idx").cast("int"), "band_val", "fp"
-        )
-        # eager O(batch) checkpoint; the index union stays lazy (see
-        # simhash_index_apply_batch — the old O(index)-per-batch
-        # union checkpoint grew with the stream)
-        .localCheckpoint(eager=True)
-    )
-    all_postings = postings.unionByName(new_postings)
-    delta_banded = delta_fps.select(
-        "modality",
-        F.col("fp").alias("fp_d"),
-        F.posexplode(
-            tagged_band_slice_array(F.col("fp"), F.col("modality"), params)
-        ).alias("band_idx", "band_val"),
-    )
-    cand = (
-        delta_banded.join(all_postings, ["modality", "band_idx", "band_val"])
-        .select("modality", "fp_d", F.col("fp").alias("fp_o"))
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("fp_d").bitwiseXOR(F.col("fp_o"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_h_expr)
-    )
-    merged_members = members.unionByName(new_members)
-    pairs = (
-        cand.join(
-            new_members.select(
-                "modality", F.col("fp").alias("fp_d"), F.col("id").alias("_ida")
-            ),
-            ["modality", "fp_d"],
-        )
-        .join(
-            merged_members.select(
-                "modality", F.col("fp").alias("fp_o"), F.col("id").alias("_idb")
-            ),
-            ["modality", "fp_o"],
-        )
-        .select(
-            "modality",
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "hamming",
-        )
-        # both-new double emission carries the same symmetric
-        # hamming, so the min-merge groupBy collapses it — see
-        # simhash_index_apply_batch
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    current = state.read("tnear_pairs", TAGGED_PAIRS_SCHEMA)
-    sc.setJobDescription("tagged_index: pairs merge write")
-    state.write(
-        "tnear_pairs",
-        current.unionByName(pairs)
-        .groupBy("modality", "id_a", "id_b")
-        .agg(F.min("hamming").cast("int").alias("hamming")),
-        # wide write — see simhash_index_apply_batch
-        partitions=max(2, shuffle_partition_count(fps.sparkSession)),
-    )
-    sc.setJobDescription("tagged_index: postings append")
-    state.append("tband_postings", new_postings)
-    sc.setJobDescription("tagged_index: members append")
-    state.append("tfp_members", new_members)
-    sc.setJobDescription(None)
 
 
 def tagged_stream_into_state(
@@ -637,13 +581,7 @@ def tagged_stream_into_state(
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         tagged_index_apply_batch(fingerprint_fn(batch), state, params)
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 SFX_MEMBERS_SCHEMA = "id LONG"
@@ -812,13 +750,7 @@ def suffix_stream_into_state(
             id_col=id_col,
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 DC_MEMBERS_SCHEMA = "id LONG"
@@ -925,13 +857,7 @@ def domain_caps_stream_into_state(
             batch, state, cap=cap, url_col=url_col, id_col=id_col
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 UK_MEMBERS_SCHEMA = "id LONG"
@@ -1015,13 +941,7 @@ def url_keep_one_stream_into_state(
             batch, state, url_col=url_col, id_col=id_col
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 PP_MEMBERS_SCHEMA = "id LONG"
@@ -1159,13 +1079,7 @@ def paragraph_stream_into_state(
             batch, state, sep=sep, text_col=text_col, id_col=id_col
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(docs, apply_batch, checkpoint)
 
 
 CP_MEMBERS_SCHEMA = "partition STRING, file LONG"
@@ -1269,13 +1183,7 @@ def compaction_stream_into_state(
             size_col=size_col,
         )
 
-    writer = files.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(files, apply_batch, checkpoint)
 
 
 BLOOM_BITS_SCHEMA = "bit INT"
@@ -1339,10 +1247,4 @@ def bloom_stream_into_state(
             m_bits=m_bits, k_hashes=k_hashes, seed_base=seed_base,
         )
 
-    writer = keys.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain_into_state(keys, apply_batch, checkpoint)

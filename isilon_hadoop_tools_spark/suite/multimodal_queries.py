@@ -32,6 +32,7 @@ from isilon_hadoop_tools_spark.operators.guards import dangling_references
 from isilon_hadoop_tools_spark.operators.reconcile import reconcile
 from isilon_hadoop_tools_spark.operators.topk import topk_per_group
 from isilon_hadoop_tools_spark.oracle import values_cte
+from isilon_hadoop_tools_spark.session import job_label
 from isilon_hadoop_tools_spark.sources import catalogs, cluster, tpch
 from isilon_hadoop_tools_spark.sources.local import local_df
 
@@ -1098,45 +1099,42 @@ def multimodal_unified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans with a trivial plan. Same rows, same band join, same
     # declared result (oracle-verified).
     def fp(which: str):
-        sc = spark.sparkContext
-        sc.setJobDescription(f"unified_near_dups: {which} fingerprints")
-        if which == "text":
-            out = dedup.simhash(docs, "text", "doc_id", bits=32).select(
-                F.lit("text").alias("modality"),
-                "id",
-                F.col("simhash").alias("fhash"),
-            )
-        elif which == "image":
-            out = M.bmp_ahash(
-                _bmp_payload_df(spark, sf_dir, base_mod=200),
-                "payload",
-                "doc_id",
-            ).select(
-                F.lit("image").alias("modality"),
-                F.col("doc_id").alias("id"),
-                F.col("ahash").alias("fhash"),
-            )
-        elif which == "audio":
-            out = M.wav_goertzel_hash(
-                _wav_long_payload_df(spark, sf_dir), "payload", "doc_id"
-            ).select(
-                F.lit("audio").alias("modality"),
-                F.col("doc_id").alias("id"),
-                F.col("ahash").alias("fhash"),
-            )
-        else:
-            out = M.y4m_video_hash(
-                _y4m_payload_df(spark, sf_dir, base_mod=200),
-                "payload",
-                "doc_id",
-            ).select(
-                F.lit("video").alias("modality"),
-                F.col("doc_id").alias("id"),
-                F.col("vhash").alias("fhash"),
-            )
-        out = out.localCheckpoint(eager=True)
-        sc.setJobDescription(None)
-        return out
+        with job_label(spark, f"unified_near_dups: {which} fingerprints"):
+            if which == "text":
+                out = dedup.simhash(docs, "text", "doc_id", bits=32).select(
+                    F.lit("text").alias("modality"),
+                    "id",
+                    F.col("simhash").alias("fhash"),
+                )
+            elif which == "image":
+                out = M.bmp_ahash(
+                    _bmp_payload_df(spark, sf_dir, base_mod=200),
+                    "payload",
+                    "doc_id",
+                ).select(
+                    F.lit("image").alias("modality"),
+                    F.col("doc_id").alias("id"),
+                    F.col("ahash").alias("fhash"),
+                )
+            elif which == "audio":
+                out = M.wav_goertzel_hash(
+                    _wav_long_payload_df(spark, sf_dir), "payload", "doc_id"
+                ).select(
+                    F.lit("audio").alias("modality"),
+                    F.col("doc_id").alias("id"),
+                    F.col("ahash").alias("fhash"),
+                )
+            else:
+                out = M.y4m_video_hash(
+                    _y4m_payload_df(spark, sf_dir, base_mod=200),
+                    "payload",
+                    "doc_id",
+                ).select(
+                    F.lit("video").alias("modality"),
+                    F.col("doc_id").alias("id"),
+                    F.col("vhash").alias("fhash"),
+                )
+            return out.localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         text, image, audio, video = pool.map(

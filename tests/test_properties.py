@@ -1120,7 +1120,9 @@ def test_viterbi_segment_matches_enumeration_random_costs(spark, word, data):
 def test_tagged_band_pairs_equals_per_modality_union(spark, data, n):
     """Consistency law: the unified tagged band join must equal the
     union of independent per-modality hamming_band_pairs runs —
-    random hashes, shared values across modalities."""
+    random hashes, shared values across modalities. Both run the one
+    shared band-join core, so the answer is also pinned to a
+    brute-force all-pairs hamming reference over the same rows."""
     rows = []
     for m, (bits, max_h, bands) in (("x", (8, 1, 4)), ("y", (12, 2, 4))):
         for i in range(n):
@@ -1143,6 +1145,15 @@ def test_tagged_band_pairs_equals_per_modality_union(spark, data, n):
         ).collect():
             want[(m, r["id_a"], r["id_b"])] = r["hamming"]
     assert got == want
+    brute = {}
+    for m, (_bits, max_h, _bands) in params.items():
+        hs = [(i, h) for mm, i, h in rows if mm == m]
+        for i, hi in hs:
+            for j, hj in hs:
+                d = bin(hi ^ hj).count("1")
+                if i < j and d <= max_h:
+                    brute[(m, i, j)] = d
+    assert got == brute
 
 
 @_SETTINGS

@@ -536,6 +536,36 @@ def test_tagged_index_stream_null_tag_dropped_not_fatal(spark, tmp_path):
         )
 
 
+def test_tagged_index_failed_batch_restores_job_description(spark, tmp_path):
+    """An unknown modality tag fails the batch mid-apply (at the
+    postings checkpoint, after the members checkpoint and the empty
+    probe have run under their own job labels); the calling thread's
+    job description must be back to its value before the call."""
+    import pytest
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        tagged_index_apply_batch,
+    )
+
+    sc = spark.sparkContext
+    state = ParquetState(spark, str(tmp_path / "state"))
+    sc.setJobDescription("caller: outer step")
+    try:
+        with pytest.raises(Exception, match="unknown modality tag: x"):
+            tagged_index_apply_batch(
+                spark.createDataFrame(
+                    [("t", 1, 0b0001), ("x", 9, 0b0001)],
+                    "modality STRING, id LONG, fhash LONG",
+                ),
+                state,
+                {"t": (12, 2, 4)},
+            )
+        assert (
+            sc.getLocalProperty("spark.job.description") == "caller: outer step"
+        )
+    finally:
+        sc.setJobDescription(None)
+
+
 # ---- streaming exact-substring (suffix) dedup index (L29d twin) ----
 
 # min_len=4 scenario exercising every maintenance path:

@@ -30,7 +30,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from isilon_hadoop_tools_spark import suite  # noqa: E402
-from isilon_hadoop_tools_spark.session import get_session  # noqa: E402
+from isilon_hadoop_tools_spark.session import get_session, job_label  # noqa: E402
 
 
 def parse_log(log_dir: Path) -> list[dict]:
@@ -129,11 +129,9 @@ def main() -> int:
         "overwrite"
     ).save()
 
-    marker = spark.sparkContext
-    marker.setJobDescription(f"PROFILE-START {name}")
-    spark.range(1).count()  # job marking the start of the timed window
+    with job_label(spark, f"PROFILE-START {name}"):
+        spark.range(1).count()  # job marking the start of the timed window
     t0 = time.perf_counter()
-    marker.setJobDescription(None)
     df = fn(spark, sf_dir)
     t_build = time.perf_counter() - t0
     df.write.format("noop").mode("overwrite").save()
